@@ -159,10 +159,8 @@ object MultimodalQueries {
                                 targetBytes: Long = 4L << 20): DataFrame = {
     val ids = table(s, dir, "documents").select(col("doc_id"))
     val total = ids.rdd.map(r => bytesOf(r.getLong(0))).fold(0L)(_ + _)
-    val parts = math.max(1L, math.min(
-      s.sparkContext.defaultParallelism.toLong,
-      (total + targetBytes - 1) / targetBytes)).toInt
-    ids.repartition(parts)
+    ids.repartition(math.min(s.sparkContext.defaultParallelism,
+      graft.sources.TableIO.filesFor(total, targetBytes)))
   }
 
   /** Estimated RIFF size of [[audioParams]]' waveform (header + 16-bit
@@ -1158,15 +1156,12 @@ object MultimodalQueries {
     *    amps never tie) and only bits {j−1, j, j+1} can change, so the
     *    twin sits at Hamming 1–3 from its base — the pair the BANDED
     *    search must recover. */
-  private def encodeWavNear(id: Long, variant: Int): Array[Byte] = {
-    val m = (2 + id % 6).toInt
-    val c = (1 + id % 2).toInt
-    val rep = if (variant == 1) 2 else 1
+  private[graft] def encodeWavNear(id: Long, variant: Int): Array[Byte] = {
+    val (m, c, rep) = nearShape(id, variant)
     val gain = if (variant == 2) 2 else 1
     val j = (id % 56).toInt
-    val n = 57 * m * rep
     val sr = 8000
-    val dataLen = n * c * 2
+    val dataLen = 57 * m * rep * c * 2
     val buf = java.nio.ByteBuffer.allocate(44 + dataLen)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
     buf.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
@@ -1192,22 +1187,30 @@ object MultimodalQueries {
     buf.array()
   }
 
+  /** [[encodeWavNear]]'s shape: frames per segment `m`, channels `c`
+    * and the frame repeat `rep` (2 for the resampled variant 1). */
+  private def nearShape(id: Long, variant: Int): (Int, Int, Int) =
+    ((2 + id % 6).toInt, (1 + id % 2).toInt, if (variant == 1) 2 else 1)
+
+  /** Exact RIFF size of `encodeWavNear(id, variant)`: header + 57
+    * segments of `m·rep` 16-bit frames. */
+  private[graft] def wavNearBytesOf(id: Long, variant: Int): Long = {
+    val (m, c, rep) = nearShape(id, variant)
+    44L + 2L * 57 * m * rep * c
+  }
+
+  /** The variants [[wavNearFixture]] emits for doc `id`: the base plus
+    * the resampled (id%3), gain (id%4) and swap (id%5) twins. */
+  private def nearVariants(id: Long): Seq[Int] =
+    0 +: Seq(1 -> 3, 2 -> 4, 3 -> 5).collect { case (v, k) if id % k == 0 => v }
+
   private[graft] def wavNearFixture(s: SparkSession, dir: String): String = {
     val root = graft.sources.ScratchDirs.memoized("mm_wavnear_fix", dir) { r =>
-      val ids = fixtureIdsSizedBy(s, dir, { id =>
-        // base + 2× resampled (id%3) + gain (id%4) + swap (id%5) twins
-        val one = 44L + 2L * (57 * (2 + id % 6)) * (1 + id % 2)
-        one * (1 + (if (id % 3 == 0) 2L else 0L) +
-          (if (id % 4 == 0) 1L else 0L) + (if (id % 5 == 0) 1L else 0L))
-      })
+      val ids = fixtureIdsSizedBy(s, dir,
+        id => nearVariants(id).map(wavNearBytesOf(id, _)).sum)
       val rows = ids.rdd.mapPartitions(_.flatMap { row =>
         val id = row.getLong(0)
-        val out = Vector.newBuilder[Row]
-        out += Row(id * 4, encodeWavNear(id, 0))
-        if (id % 3 == 0) out += Row(id * 4 + 1, encodeWavNear(id, 1))
-        if (id % 4 == 0) out += Row(id * 4 + 2, encodeWavNear(id, 2))
-        if (id % 5 == 0) out += Row(id * 4 + 3, encodeWavNear(id, 3))
-        out.result().iterator
+        nearVariants(id).map(v => Row(id * 4 + v, encodeWavNear(id, v)))
       })
       s.createDataFrame(rows, StructType(Seq(
           StructField("audio_id", LongType),
@@ -1401,15 +1404,9 @@ object MultimodalQueries {
     * miss: the twin's 57-window energy profile shares nothing with the
     * base's, but every shared CONSECUTIVE segment pair survives, which
     * is what the temporal-shingle gate detects. */
-  private def encodeWavSplice(id: Long, twin: Boolean): Array[Byte] = {
-    val ns = (10 + id % 5).toInt
-    val segLen = (8 + 4 * (id % 2)).toInt
-    val c = (1 + id % 2).toInt
-    val zis: Seq[Int] =
-      if (!twin) 0 until ns
-      else Seq(ns) ++ (1 until ns) ++ Seq(ns + 1)
-    val gap = 2
-    val n = zis.size * segLen + (zis.size - 1) * gap
+  private[graft] def encodeWavSplice(id: Long, twin: Boolean): Array[Byte] = {
+    val (zis, segLen, c) = spliceShape(id, twin)
+    val n = zis.size * segLen + (zis.size - 1) * spliceGap
     val sr = 8000
     val dataLen = n * c * 2
     val buf = java.nio.ByteBuffer.allocate(44 + dataLen)
@@ -1430,20 +1427,37 @@ object MultimodalQueries {
       }
       if (pos < zis.size - 1) {
         var g = 0
-        while (g < gap * c) { buf.putShort(0); g += 1 }
+        while (g < spliceGap * c) { buf.putShort(0); g += 1 }
       }
     }
     buf.array()
   }
 
+  /** [[encodeWavSplice]]'s shape: the segment ids it plays in order
+    * (ns = 10 + id % 5 of them for the base; the twin swaps segment 0
+    * for a new head and appends a new tail), frames per segment and
+    * channels. */
+  private def spliceShape(id: Long, twin: Boolean): (Seq[Int], Int, Int) = {
+    val ns = (10 + id % 5).toInt
+    val zis = if (!twin) 0 until ns else Seq(ns) ++ (1 until ns) ++ Seq(ns + 1)
+    (zis, (8 + 4 * (id % 2)).toInt, (1 + id % 2).toInt)
+  }
+
+  /** Silent frames between two splice-fixture segments. */
+  private final val spliceGap = 2
+
+  /** Exact RIFF size of `encodeWavSplice(id, twin)`: header + the
+    * segments' 16-bit frames + the silent gaps between them. */
+  private[graft] def wavSpliceBytesOf(id: Long, twin: Boolean): Long = {
+    val (zis, segLen, c) = spliceShape(id, twin)
+    44L + 2L * c * (zis.size.toLong * segLen + (zis.size - 1) * spliceGap)
+  }
+
   private[graft] def wavSpliceFixture(s: SparkSession, dir: String): String = {
     val root = graft.sources.ScratchDirs.memoized("mm_wavsplice_fix", dir) { r =>
-      val ids = fixtureIdsSizedBy(s, dir, { id =>
-        // ns segments of segLen frames + 2-frame gaps, ≤2 channels;
-        // the id%4 twin re-embeds the base plus head/tail segments
-        val one = 44L + 4L * ((10 + id % 5) * (10 + 4 * (id % 2)))
-        one * (if (id % 4 == 0) 2L else 1L)
-      })
+      // every doc's base recording, plus the id%4 spliced twin
+      val ids = fixtureIdsSizedBy(s, dir, id => wavSpliceBytesOf(id, twin = false) +
+        (if (id % 4 == 0) wavSpliceBytesOf(id, twin = true) else 0L))
       val rows = ids.rdd.mapPartitions(_.flatMap { row =>
         val id = row.getLong(0)
         val base = Row(id * 2, encodeWavSplice(id, twin = false))

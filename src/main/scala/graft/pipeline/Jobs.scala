@@ -23,7 +23,7 @@ object Jobs {
       recomputeMax: Seq[String] = Nil,
       rejectedDir: Option[String] = None,
       orcMirrorDir: Option[String] = None,
-      numOutputFiles: Int = 100,
+      numOutputFiles: Option[Int] = None, // None = sized by bytes
       vacuumHrs: Option[Double] = None) // reference --vacuum_hrs (curated.py:366-368)
 
   def runCurated(spark: SparkSession, input: DataFrame,
@@ -39,10 +39,8 @@ object Jobs {
       TableIO.writeJsonLines(dd.outdated, s"$d/outdated")
     }
     ManagedTable.merge(spark, cfg.tableRoot, dd.latest, cfg.keys)
-    cfg.orcMirrorDir.foreach { d =>
-      TableIO.writeOrcZlib(ManagedTable.read(spark, cfg.tableRoot), d,
-        cfg.numOutputFiles)
-    }
+    cfg.orcMirrorDir.foreach(d => ManagedTable.writeOrcMirror(spark,
+      cfg.tableRoot, d, cfg.numOutputFiles))
     // retention-duration vacuum after publish, as the reference runs it
     cfg.vacuumHrs.foreach(h =>
       ManagedTable.vacuum(cfg.tableRoot, retainHours = h))

@@ -3,7 +3,8 @@ package graft.pipeline
 /** Reference-shaped command-line surface for the job drivers
   * (mls_listings_curated.py:18-56's argparse block): date window, input
   * dirs (comma-separated), the six reference-data dim dirs, target schema
-  * file, optional MLS isin filter, output-file count, retention-vacuum
+  * file, optional MLS isin filter, optional output-file count (without
+  * it the ORC mirror is sized by bytes), retention-vacuum
   * hours, shuffle partitions, reject/log dirs, the property-id source
   * block (API endpoint/batch/sleep/modes/limit, MSSQL input dirs), and
   * the debug/logging switches. Flags keep the reference's exact names
@@ -25,7 +26,7 @@ final case class JobsCliArgs(
     targetSchemaFile: Option[String] = None,
     logDir: Option[String] = None,
     rejectDataDir: Option[String] = None,
-    numOutputFiles: Int = 100,
+    numOutputFiles: Option[Int] = None,     // None = sized by bytes
     vacuumHrs: Option[Double] = None,
     shufflePartitions: Int = 2,
     propertyIdSource: String = "NONE",          // API | MSSQL | NONE
@@ -47,7 +48,7 @@ final case class JobsCliArgs(
     backfillLimit: Option[Int] = None,
     listingsOrcDir: Option[String] = None,
     overwriteOrcLocation: Boolean = false,
-    numOutputOrcFiles: Int = 100) {
+    numOutputOrcFiles: Option[Int] = None) { // None = sized by bytes
   def fromDateIso: String = JobsCli.iso(fromDate)
   def toDateIso: String = JobsCli.iso(toDate)
   def backfillRangeIso: Option[(String, String)] = for {
@@ -135,7 +136,7 @@ object JobsCli {
       targetSchemaFile = opts.get("--target_schema_file"),
       logDir = opts.get("--log_dir"),
       rejectDataDir = opts.get("--reject_data_dir"),
-      numOutputFiles = opts.get("--num_output_files").map(_.toInt).getOrElse(100),
+      numOutputFiles = opts.get("--num_output_files").map(_.toInt),
       vacuumHrs = opts.get("--vacuum_hrs").map(_.toDouble),
       shufflePartitions =
         opts.get("--shuffle_partitions").map(_.toInt).getOrElse(2),
@@ -156,8 +157,8 @@ object JobsCli {
       logRejectedRecords = switches("--log_rejected_records"))
     iso(args.fromDate); iso(args.toDate) // validate eagerly
     require(args.inputDirListings.nonEmpty, "empty --input_dir_listings")
-    require(args.numOutputFiles > 0,
-      s"--num_output_files ${args.numOutputFiles} must be positive")
+    args.numOutputFiles.foreach(n =>
+      require(n > 0, s"--num_output_files $n must be positive"))
     require(Set("API", "MSSQL", "NONE")(args.propertyIdSource),
       s"--property_id_source '${args.propertyIdSource}' not in API|MSSQL|NONE")
     require(args.propertyIdSource != "API" ||
@@ -205,7 +206,7 @@ object JobsCli {
       inputDirCounties = Some(req("--input_dir_counties")),
       inputDirGeoIds = Some(req("--input_dir_geo_ids")),
       listingsHistOutputDir = Some(req("--listings_hist_output_dir")),
-      numOutputFiles = opts.get("--num_output_files").map(_.toInt).getOrElse(100),
+      numOutputFiles = opts.get("--num_output_files").map(_.toInt),
       vacuumHrs = opts.get("--vacuum_hrs").map(_.toDouble),
       targetSchemaFile = Some(req("--target_schema_file")),
       shufflePartitions =
@@ -214,8 +215,8 @@ object JobsCli {
       debug = switches("--debug"))
     iso(args.fromDate); iso(args.toDate)
     require(args.inputDirListings.nonEmpty, "empty --input_dir_listings")
-    require(args.numOutputFiles > 0,
-      s"--num_output_files ${args.numOutputFiles} must be positive")
+    args.numOutputFiles.foreach(n =>
+      require(n > 0, s"--num_output_files $n must be positive"))
     args
   }
 
@@ -255,8 +256,7 @@ object JobsCli {
         opts.get("--input_dir_property_master_mssql"),
       listingsOrcDir = Some(req("--listings_orc_dir")),
       overwriteOrcLocation = switches("--overwrite_orc_location"),
-      numOutputOrcFiles =
-        opts.get("--num_output_orc_files").map(_.toInt).getOrElse(100),
+      numOutputOrcFiles = opts.get("--num_output_orc_files").map(_.toInt),
       vacuumHrs = opts.get("--vacuum_hrs").map(_.toDouble),
       targetSchemaFile = Some(req("--target_schema_file")),
       shufflePartitions =
@@ -281,8 +281,8 @@ object JobsCli {
         "Null|Provisional|Final")
     args.backfillLimit.foreach(n =>
       require(n > 0, s"--backfill_limit $n must be positive"))
-    require(args.numOutputOrcFiles > 0,
-      s"--num_output_orc_files ${args.numOutputOrcFiles} must be positive")
+    args.numOutputOrcFiles.foreach(n =>
+      require(n > 0, s"--num_output_orc_files $n must be positive"))
     require(args.listingsDeltaDir != args.listingsOrcDir,
       "--listings_orc_dir must differ from --listings_delta_dir")
     args

@@ -175,7 +175,7 @@ object JobsDemo {
       tableRoot = s"$outDir/curated", keys = Seq("o_custkey"),
       ordering = Seq(col("o_orderdate").desc, col("o_orderkey").desc),
       rejectedDir = Some(s"$outDir/quarantine"),
-      orcMirrorDir = Some(s"$outDir/curated_orc"), numOutputFiles = 4)
+      orcMirrorDir = Some(s"$outDir/curated_orc"))
 
     def batch(from: String, to: String) =
       orders.filter(col("o_orderdate") >= from && col("o_orderdate") < to)

@@ -26,7 +26,8 @@ import graft.sources.{ManagedTable, MergeClauses, TableIO, VersionedLayout}
   * Scale notes: the dims broadcast (MlsValidate/attachGeo), the two
   * windows and the merge shuffle once on (mls, mls_listing_id), the
   * lookup leg batches partition-sized service calls, and the final ORC
-  * mirror is file-count-controlled — the same shapes the e2e gates pin.
+  * mirror is sized by the snapshot's bytes (~128 MiB files) unless
+  * `--num_output_files` pins the count — the same shapes the e2e gates pin.
   */
 object MlsJobsMain {
 
@@ -45,7 +46,7 @@ object MlsJobsMain {
 
   /** The 9 asg_* columns dropped from the ORC mirror (curated.py:360) —
     * the mirror keeps only asg_primary_id + its final flag. */
-  private val mirrorDropped = Seq("asg_primary_id_source",
+  private[mls] val mirrorDropped = Seq("asg_primary_id_source",
     "asg_primary_id_source_queried_timestamp",
     "asg_primary_id_source_responded_flag", "asg_primary_id_issue_text",
     "asg_primary_id_mssql_fixed_flag", "asg_primary_id_updated_flag",
@@ -199,9 +200,8 @@ object MlsJobsMain {
       s"job=listings_curated from=${a.fromDate} to=${a.toDate}") {
       ManagedTable.merge(spark, deltaRoot, finalDf, keys)
     }
-    TableIO.writeOrcZlib(
-      ManagedTable.read(spark, deltaRoot).drop(mirrorDropped: _*),
-      a.listingsOutputDir, a.numOutputFiles)
+    ManagedTable.writeOrcMirror(spark, deltaRoot, a.listingsOutputDir,
+      a.numOutputFiles, drop = mirrorDropped)
     a.vacuumHrs.foreach(h => ManagedTable.vacuum(deltaRoot, retainHours = h))
     deltaRoot
   }
@@ -268,8 +268,7 @@ object MlsJobsMain {
     // source_as_of_date the sanitizer nulled never match and re-insert.
     ManagedTable.merge(spark, deltaRoot, source, MlsJob2Gate.grainKeys,
       MlsJob2Gate.histMergeSpec, nullSafeKeys = false)
-    TableIO.writeOrcZlib(ManagedTable.read(spark, deltaRoot),
-      histOut, a.numOutputFiles)
+    ManagedTable.writeOrcMirror(spark, deltaRoot, histOut, a.numOutputFiles)
     a.vacuumHrs.foreach(h => ManagedTable.vacuum(deltaRoot, retainHours = h))
     deltaRoot
   }
@@ -338,9 +337,8 @@ object MlsJobsMain {
     ManagedTable.merge(spark, deltaRoot, enriched, keys,
       MergeClauses.Spec(updateWhen = Some(changedAny)))
     if (a.overwriteOrcLocation)
-      TableIO.writeOrcZlib(
-        ManagedTable.read(spark, deltaRoot).drop(mirrorDropped: _*),
-        a.listingsOrcDir.get, a.numOutputOrcFiles)
+      ManagedTable.writeOrcMirror(spark, deltaRoot, a.listingsOrcDir.get,
+        a.numOutputOrcFiles, drop = mirrorDropped)
     a.vacuumHrs.foreach(h => ManagedTable.vacuum(deltaRoot, retainHours = h))
     deltaRoot
   }

@@ -1010,6 +1010,34 @@ object ManagedTable extends VersionedLayout {
     swapPointer(cloneRoot, 0)
   }
 
+  /** On-disk bytes of the live snapshot's parquet files — the sizing
+    * input of [[optimize]] and [[writeOrcMirror]]. A DV version holds no
+    * data files of its own, so its base snapshot is sized instead (an
+    * upper bound: the tombstoned rows still count). A local file walk of
+    * one version dir; no Spark job. */
+  def liveBytes(root: String): Long = {
+    val live = currentVersion(root)
+    val sizedDir = dvBaseOf(root, live).fold(s"v$live")(b => s"v$b")
+    val walk = Files.walk(Paths.get(root, sizedDir))
+    try walk.iterator().asScala
+      .filter(p => p.getFileName.toString.endsWith(".parquet"))
+      .map(Files.size).sum
+    finally walk.close()
+  }
+
+  /** Overwrite `path` with an ORC (zlib) mirror of the live snapshot,
+    * minus the `drop` columns (reference: the Delta→ORC mirror,
+    * mls_listings_curated.py:359-363). `numFiles` is the operator's
+    * explicit file count (`--num_output_files` / `--num_output_orc_files`);
+    * without one the count follows the snapshot's bytes
+    * ([[TableIO.filesFor]] at its 128 MiB target) — the reference's fixed
+    * 100 files would shred a small table into tiny files and pack a
+    * large one into huge ones. */
+  def writeOrcMirror(spark: SparkSession, root: String, path: String,
+                     numFiles: Option[Int], drop: Seq[String] = Nil): Unit =
+    TableIO.writeOrcZlib(read(spark, root).drop(drop: _*), path,
+      numFiles.getOrElse(TableIO.filesFor(liveBytes(root))))
+
   /** Incremental OPTIMIZE — the compaction that scales: [[optimize]]
     * rewrites the whole snapshot, but real fragmentation accumulates as a
     * SMALL-FILE TAIL (every small merge/append leaves a few KB-files
@@ -1027,7 +1055,7 @@ object ManagedTable extends VersionedLayout {
     * refuses links. No-op (no new version) when fewer than two small
     * files exist. */
   def compactSmall(spark: SparkSession, root: String,
-                   targetFileBytes: Long = 128L << 20): Unit = {
+                   targetFileBytes: Long = TableIO.TargetFileBytes): Unit = {
     val live = currentVersion(root)
     require(dvBaseOf(root, live).isEmpty,
       s"compactSmall: v$live is a deletion-vector version — run optimize " +
@@ -1043,9 +1071,7 @@ object ManagedTable extends VersionedLayout {
     if (small.size <= 1) return
     val next = live + 1
     val nextDir = Paths.get(root, s"v$next")
-    val smallBytes = small.map(_._2).sum
-    val nPacked = math.max(1, math.ceil(
-      smallBytes.toDouble / targetFileBytes).toInt)
+    val nPacked = TableIO.filesFor(small.map(_._2).sum, targetFileBytes)
     // Packed writes land in a staging subdir, then move up: spark part-
     // file names carry a fresh UUID, so they can never collide with the
     // carried names.
@@ -1083,19 +1109,9 @@ object ManagedTable extends VersionedLayout {
   }
 
   def optimize(spark: SparkSession, root: String,
-               targetFileBytes: Long = 128L << 20,
+               targetFileBytes: Long = TableIO.TargetFileBytes,
                zorderBy: Seq[String] = Nil): Unit = {
-    val live = currentVersion(root)
-    // A DV version holds no data files of its own — size its base
-    // snapshot (an upper bound; the rewrite purges the tombstones).
-    val sizedDir = dvBaseOf(root, live).fold(s"v$live")(b => s"v$b")
-    val walk = Files.walk(Paths.get(root, sizedDir))
-    val snapBytes =
-      try walk.iterator().asScala
-        .filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .map(Files.size).sum
-      finally walk.close()
-    val nFiles = math.max(1, math.ceil(snapBytes.toDouble / targetFileBytes).toInt)
+    val nFiles = TableIO.filesFor(liveBytes(root), targetFileBytes)
     val cur = read(spark, root)
     var zorderCuts: Map[String, Seq[Double]] = Map.empty
     val laid =

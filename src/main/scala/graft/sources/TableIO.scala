@@ -27,21 +27,33 @@ object TableIO {
     * footer-sniffed per query (guide §6's argument for manifest-backed
     * table formats, applied to the schema axis). MUTABLE paths (managed
     * table versions, per-invocation scratch outputs) must NOT use this —
-    * they keep bare `spark.read.parquet`. */
-  private val staticSchemas = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
+    * they keep bare `spark.read.parquet`.
+    *
+    * One entry per `format:path`, holding the dir mtime the schema was
+    * inferred at: a rewrite replaces the entry instead of adding one, so
+    * the map is bounded by the number of distinct paths read. */
+  private[sources] val staticSchemas = new java.util.concurrent.ConcurrentHashMap[
+    String, (Long, org.apache.spark.sql.types.StructType)]()
 
-  /** Read a write-once path with the schema cached per (format, path,
-    * dir mtime): the mtime key makes a wiped-and-rewritten path (the
-    * gate harness's fresh() cycle) re-infer instead of serving a stale
-    * schema — one stat call per read, ~μs against the ~65 ms saved. */
+  /** Read a write-once path with its schema cached per (format, path),
+    * re-inferred whenever the dir mtime moves: a wiped-and-rewritten path
+    * (the gate harness's fresh() cycle) re-infers instead of serving a
+    * stale schema — one stat call per read, ~μs against the ~65 ms saved.
+    * A path that cannot be stat'ed as a local file (a `file:` or remote
+    * URI, a transient IO error) has no mtime to validate against, so it
+    * is read bare and nothing is cached. */
   def readStatic(spark: SparkSession, path: String,
                  format: String = "parquet"): DataFrame = {
-    val mtime = try java.nio.file.Files.getLastModifiedTime(
-      java.nio.file.Paths.get(path)).toMillis catch { case _: Exception => -1L }
-    val sc = staticSchemas.computeIfAbsent(s"$format:$path@$mtime",
-      _ => spark.read.format(format).load(path).schema)
-    spark.read.schema(sc).format(format).load(path)
+    val reader = spark.read.format(format)
+    val mtime =
+      try Some(java.nio.file.Files.getLastModifiedTime(
+        java.nio.file.Paths.get(path)).toMillis)
+      catch { case _: java.io.IOException | _: java.nio.file.InvalidPathException => None }
+    mtime.fold(reader.load(path)) { m =>
+      val (_, sc) = staticSchemas.compute(s"$format:$path", (_, hit) =>
+        if (hit != null && hit._1 == m) hit else (m, reader.load(path).schema))
+      reader.schema(sc).load(path)
+    }
   }
 
   /** Read one testdata table (`<dir>/<name>.parquet`). */
@@ -89,6 +101,18 @@ object TableIO {
     }
     dfs.reduce(_ unionAll _)
   }
+
+  /** Default bytes per output file: the usual columnar-file target, large
+    * enough that per-file open/footer costs vanish and small enough to
+    * keep scan parallelism. */
+  val TargetFileBytes: Long = 128L << 20
+
+  /** Output file count for `bytes` of data at `targetBytes` per file:
+    * `max(1, ceil(bytes / targetBytes))`. The one sizing rule shared by
+    * every byte-sized writer (OPTIMIZE, small-file compaction, the ORC
+    * mirrors, the sized media fixtures). */
+  def filesFor(bytes: Long, targetBytes: Long = TargetFileBytes): Int =
+    math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
 
   /** ORC sink with zlib compression and explicit output-file-count control.
     * Reference: mls_listings_curated.py:359-363 (Delta→ORC mirror).

@@ -22,13 +22,14 @@ class JobsCliSpec extends AnyFunSuite {
     assert(a.fromDateIso == "1995-01-01" && a.toDateIso == "1996-12-31")
     assert(a.inputDirListings.size == 2)
     assert(a.inputMlsList.contains(Seq("MLS0", "MLS2")))
-    assert(a.numOutputFiles == 7 && a.vacuumHrs.contains(168.0))
+    assert(a.numOutputFiles.contains(7) && a.vacuumHrs.contains(168.0))
     assert(a.shufflePartitions == 3 && a.debug && a.logRejectedRecords)
 
-    // defaults mirror the reference's argparse defaults
+    // defaults mirror the reference's argparse defaults, except the
+    // mirror file count: unset means sized by bytes, not a fixed 100
     val d = JobsCli.parse(Seq("--from_date", "19950101", "--to_date", "19950201",
       "--input_dir_listings", fixture, "--listings_output_dir", "/tmp/x"))
-    assert(d.numOutputFiles == 100 && d.shufflePartitions == 2 &&
+    assert(d.numOutputFiles.isEmpty && d.shufflePartitions == 2 &&
       d.vacuumHrs.isEmpty && !d.debug)
 
     intercept[IllegalArgumentException](JobsCli.parse(Seq("--to_date", "19950101")))
@@ -52,7 +53,7 @@ class JobsCliSpec extends AnyFunSuite {
     val a = JobsCli.parseHist(histArgv() ++
       Seq("--num_output_files", "3", "--vacuum_hrs", "24"))
     assert(a.listingsHistOutputDir.contains("/tmp/hist"))
-    assert(a.numOutputFiles == 3 && a.vacuumHrs.contains(24.0))
+    assert(a.numOutputFiles.contains(3) && a.vacuumHrs.contains(24.0))
     assert(a.fromDateIso == "2024-01-01")
     // every hist-required flag is enforced
     for (req <- Seq("--listings_hist_output_dir", "--input_dir_boards",
@@ -87,7 +88,7 @@ class JobsCliSpec extends AnyFunSuite {
     assert(a.listingsDeltaDir.contains("/tmp/delta"))
     assert(a.backfillRangeIso.contains(("2024-01-01", "2024-01-31")))
     assert(a.backfillLimit.contains(40) && a.overwriteOrcLocation)
-    assert(a.numOutputOrcFiles == 2)
+    assert(a.numOutputOrcFiles.contains(2))
     // reference choices: NONE is a Job-1 value, 'New' a Job-1 mode
     intercept[IllegalArgumentException](JobsCli.parseBackfill(
       base.updated(5, "NONE")))

@@ -2,6 +2,8 @@ package graft.pipeline.mls
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
@@ -18,6 +20,90 @@ import graft.sources.ManagedTable
 class MlsJobsMainSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
+
+  /** MSSQL fixtures — the MlsEnrichMssqlGate value cycles, written as ORC
+    * dirs under `root` so they travel the real --input_dir_*_mssql path. */
+  private def writeMssqlFixtures(root: String): Unit = {
+    val ks = spark.range(1, 151).selectExpr("CAST(id AS BIGINT) AS k")
+    ks.filter("k % 7 <> 0").selectExpr(
+        "'MLS' || CAST(k % 3 AS STRING) AS mls",
+        "'L' || CAST(k AS STRING) AS mlslistingid",
+        """CASE WHEN k % 11 = 1 THEN CAST(NULL AS BIGINT)
+          | WHEN k % 13 = 2 THEN CAST(2000 + k % 10 AS BIGINT)
+          | ELSE CAST(1001 + k % 50 AS BIGINT) END AS ailpropertyid""".stripMargin)
+      .write.mode("overwrite").orc(s"$root/mssql_ldt")
+    ks.filter("k <= 60").selectExpr(
+        "CAST(1000 + k AS BIGINT) AS asgpropid",
+        """CASE WHEN k % 6 = 3 THEN CAST(NULL AS BIGINT)
+          | WHEN k % 4 = 0 THEN CAST(1001 + k % 30 AS BIGINT)
+          | WHEN k % 9 = 5 THEN CAST(3000 + k AS BIGINT)
+          | ELSE CAST(1000 + k AS BIGINT) END AS asgprimaryid""".stripMargin,
+        "CAST(CASE WHEN k % 3 = 1 THEN 1 ELSE 0 END AS INTEGER) AS isprovisional",
+        "CASE WHEN k % 5 < 3 THEN '2023-06-01' ELSE CAST(NULL AS STRING) END AS lastvalidated",
+        "CASE WHEN k % 7 < 4 THEN '2022-01-01' ELSE CAST(NULL AS STRING) END AS asgtimestamp")
+      .write.mode("overwrite").orc(s"$root/mssql_pm")
+  }
+
+  private def writeResource(root: String, name: String): Unit =
+    Files.writeString(Paths.get(root, name), new String(
+      getClass.getResourceAsStream(s"/$name").readAllBytes(),
+      java.nio.charset.StandardCharsets.UTF_8))
+
+  /** Read-only Job 1/2 inputs: one January batch, the six dims and both
+    * schema files. */
+  private lazy val mirrorInputs: String = {
+    val root = Files.createTempDirectory("graft_cli_mirror_in").toString
+    MlsJob1Gate.synthesize(
+        MlsJob1Gate.rawBase(spark, dir, 1, "2024-01-01", tag = "x"))
+      .drop("gate_batch").write.mode("overwrite").orc(s"$root/in_a")
+    MlsJob1Gate.dims.foreach { case (n, _, _) =>
+      MlsJob1Gate.dimDf(spark, n).write.mode("overwrite").orc(s"$root/dim_$n")
+    }
+    writeResource(root, "mls_listings_schema.json")
+    writeResource(root, "mls_listings_hist_schema.json")
+    root
+  }
+
+  /** Job 1 then Job 2 over [[mirrorInputs]] into a fresh output root, both
+    * with `extra` appended to their argv; returns the output root. */
+  private def runJobs12(extra: Seq[String]): String = {
+    val in = mirrorInputs
+    val out = Files.createTempDirectory("graft_cli_mirror").toString
+    val window = Seq("--from_date", "20240101", "--to_date", "20240131",
+      "--input_dir_listings", s"$in/in_a") ++
+      MlsJob1Gate.dims.flatMap { case (n, _, _) =>
+        val flag = if (n == "psub") "property_sub_types" else n
+        Seq(s"--input_dir_$flag", s"$in/dim_$n")
+      }
+    MlsJobsMain.runJob1(spark, JobsCli.parse(window ++ Seq(
+        "--listings_output_dir", s"$out/curated",
+        "-s", s"$in/mls_listings_schema.json", "-r", s"$out/rejects") ++ extra),
+      asOf = expr("DATE '2024-06-01'"),
+      now = expr("TIMESTAMP '2024-06-01 00:00:00'"))
+    MlsJobsMain.runJob2(spark, JobsCli.parseHist(window ++ Seq(
+        "--listings_hist_output_dir", s"$out/hist",
+        "-s", s"$in/mls_listings_hist_schema.json", "-g", s"$out/logs") ++ extra),
+      asOf = expr("DATE '2024-06-01'"),
+      now = expr("TIMESTAMP '2024-06-01 00:00:00'"))
+    out
+  }
+
+  private def orcFiles(dir: String): Int = {
+    val st = Files.list(Paths.get(dir))
+    try st.iterator().asScala.count(_.getFileName.toString.endsWith(".orc"))
+    finally st.close()
+  }
+
+  /** The mirror at `mirrorDir` holds exactly the live snapshot of
+    * `deltaRoot` minus `dropped`: same columns in order, same rows. */
+  private def assertMirrors(mirrorDir: String, deltaRoot: String,
+                            dropped: Seq[String]): Unit = {
+    val mirror = spark.read.orc(mirrorDir)
+    val live = ManagedTable.read(spark, deltaRoot).drop(dropped: _*)
+    assert(mirror.columns.toSeq == live.columns.toSeq)
+    assert(live.count() > 0)
+    assert(mirror.exceptAll(live).isEmpty && live.exceptAll(mirror).isEmpty)
+  }
 
   test("budget: priority cascade beats key order at every level") {
     import spark.implicits._
@@ -65,26 +151,7 @@ class MlsJobsMainSpec extends AnyFunSuite {
     Files.writeString(Paths.get(root, "schema.json"), new String(
       getClass.getResourceAsStream("/mls_listings_schema.json").readAllBytes(),
       java.nio.charset.StandardCharsets.UTF_8))
-    // MSSQL fixtures — the MlsEnrichMssqlGate value cycles, written as ORC
-    // dirs so they travel the real --input_dir_*_mssql path.
-    val ks = spark.range(1, 151).selectExpr("CAST(id AS BIGINT) AS k")
-    ks.filter("k % 7 <> 0").selectExpr(
-        "'MLS' || CAST(k % 3 AS STRING) AS mls",
-        "'L' || CAST(k AS STRING) AS mlslistingid",
-        """CASE WHEN k % 11 = 1 THEN CAST(NULL AS BIGINT)
-          | WHEN k % 13 = 2 THEN CAST(2000 + k % 10 AS BIGINT)
-          | ELSE CAST(1001 + k % 50 AS BIGINT) END AS ailpropertyid""".stripMargin)
-      .write.mode("overwrite").orc(s"$root/mssql_ldt")
-    ks.filter("k <= 60").selectExpr(
-        "CAST(1000 + k AS BIGINT) AS asgpropid",
-        """CASE WHEN k % 6 = 3 THEN CAST(NULL AS BIGINT)
-          | WHEN k % 4 = 0 THEN CAST(1001 + k % 30 AS BIGINT)
-          | WHEN k % 9 = 5 THEN CAST(3000 + k AS BIGINT)
-          | ELSE CAST(1000 + k AS BIGINT) END AS asgprimaryid""".stripMargin,
-        "CAST(CASE WHEN k % 3 = 1 THEN 1 ELSE 0 END AS INTEGER) AS isprovisional",
-        "CASE WHEN k % 5 < 3 THEN '2023-06-01' ELSE CAST(NULL AS STRING) END AS lastvalidated",
-        "CASE WHEN k % 7 < 4 THEN '2022-01-01' ELSE CAST(NULL AS STRING) END AS asgtimestamp")
-      .write.mode("overwrite").orc(s"$root/mssql_pm")
+    writeMssqlFixtures(root)
 
     val a = JobsCli.parse(Seq(
       "--from_date", "20240101", "--to_date", "20240131",
@@ -139,24 +206,7 @@ class MlsJobsMainSpec extends AnyFunSuite {
     // Same MSSQL value cycles as the Job-1 MSSQL spec above — the
     // bootstrap keys ('MLS'||k%3, 'L'||k) are the same shape, so the
     // hand-computed (MLS0, L9) hop answer carries over.
-    val ks = spark.range(1, 151).selectExpr("CAST(id AS BIGINT) AS k")
-    ks.filter("k % 7 <> 0").selectExpr(
-        "'MLS' || CAST(k % 3 AS STRING) AS mls",
-        "'L' || CAST(k AS STRING) AS mlslistingid",
-        """CASE WHEN k % 11 = 1 THEN CAST(NULL AS BIGINT)
-          | WHEN k % 13 = 2 THEN CAST(2000 + k % 10 AS BIGINT)
-          | ELSE CAST(1001 + k % 50 AS BIGINT) END AS ailpropertyid""".stripMargin)
-      .write.mode("overwrite").orc(s"$root/mssql_ldt")
-    ks.filter("k <= 60").selectExpr(
-        "CAST(1000 + k AS BIGINT) AS asgpropid",
-        """CASE WHEN k % 6 = 3 THEN CAST(NULL AS BIGINT)
-          | WHEN k % 4 = 0 THEN CAST(1001 + k % 30 AS BIGINT)
-          | WHEN k % 9 = 5 THEN CAST(3000 + k AS BIGINT)
-          | ELSE CAST(1000 + k AS BIGINT) END AS asgprimaryid""".stripMargin,
-        "CAST(CASE WHEN k % 3 = 1 THEN 1 ELSE 0 END AS INTEGER) AS isprovisional",
-        "CASE WHEN k % 5 < 3 THEN '2023-06-01' ELSE CAST(NULL AS STRING) END AS lastvalidated",
-        "CASE WHEN k % 7 < 4 THEN '2022-01-01' ELSE CAST(NULL AS STRING) END AS asgtimestamp")
-      .write.mode("overwrite").orc(s"$root/mssql_pm")
+    writeMssqlFixtures(root)
 
     val a = JobsCli.parseBackfill(Seq(
       "--listings_delta_dir", s"$root/delta",
@@ -284,5 +334,43 @@ class MlsJobsMainSpec extends AnyFunSuite {
     val h = ManagedTable.commitHistoryWithMetadata(gateRoot)
     assert(h.head._3.contains("Create empty listings delta table"))
     assert(h.exists(_._3.exists(_.contains("job=listings_curated"))))
+  }
+
+  test("without --num_output_files each mirror is sized by bytes: one " +
+      "file, row-equal to the live snapshot minus the dropped asg_* columns") {
+    val out = runJobs12(Nil)
+    assert(orcFiles(s"$out/curated") == 1)
+    assert(orcFiles(s"$out/hist") == 1)
+    assertMirrors(s"$out/curated", MlsJobsMain.deltaDirOf(s"$out/curated"),
+      MlsJobsMain.mirrorDropped)
+    assertMirrors(s"$out/hist", MlsJobsMain.deltaDirOf(s"$out/hist"), Nil)
+  }
+
+  test("an explicit --num_output_files still writes exactly that many files") {
+    val out = runJobs12(Seq("--num_output_files", "3"))
+    assert(orcFiles(s"$out/curated") == 3)
+    assert(orcFiles(s"$out/hist") == 3)
+  }
+
+  test("Job 3 --overwrite_orc_location without --num_output_orc_files " +
+      "rewrites the ORC dir as one byte-sized file") {
+    val root = Files.createTempDirectory("graft_cli3_mirror").toString
+    graft.sources.TableIO.writeOrcZlib(
+      MlsJob3Gate.ks(spark, dir).selectExpr(MlsJob3Gate.bootExprs: _*),
+      s"$root/orc", numFiles = 3)
+    writeResource(root, "mls_listings_schema.json")
+    writeMssqlFixtures(root)
+    MlsJobsMain.runJob3(spark, JobsCli.parseBackfill(Seq(
+        "--listings_delta_dir", s"$root/delta",
+        "--listings_orc_dir", s"$root/orc",
+        "--property_id_source", "MSSQL",
+        "--input_dir_listings_mssql", s"$root/mssql_ldt",
+        "--input_dir_property_master_mssql", s"$root/mssql_pm",
+        "--property_id_modes", "Null",
+        "--overwrite_orc_location",
+        "-s", s"$root/mls_listings_schema.json", "-g", s"$root/logs")),
+      now = expr("TIMESTAMP '2024-06-01 00:00:00'"))
+    assert(orcFiles(s"$root/orc") == 1)
+    assertMirrors(s"$root/orc", s"$root/delta", MlsJobsMain.mirrorDropped)
   }
 }
